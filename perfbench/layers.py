@@ -53,6 +53,11 @@ def pipeline_probe(spark, tracer, path: str, reps: int = 2) -> dict:
     )
 
     base = spark.read.parquet(path).select("conv_id", "turn_idx", "role", "text")
+    # with a conversation over the render cap, extract_conversations would
+    # assemble fewer rows than conversations() and kernel_self_s would
+    # subtract work the extraction never did
+    if oversized_conv_ids(base).limit(1).count():
+        raise ValueError("the pipeline probe's input must take the render path only")
 
     def arrow_roundtrip():
         convs = conversations(base)

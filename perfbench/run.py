@@ -30,9 +30,13 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-#: session set-ups per run (``setup_s`` is their median); the first one
-#: also launches the JVM, the others start a new session in it
-SETUPS = 5
+#: session set-ups per run.  Set-up 0 launches the JVM and generates the
+#: input (``session.jvm_start_s``); the others start a new session in it.
+#: ``setup_s`` is the median of those from ``SETUP_SKIP`` on: set-up 1,
+#: the first after input generation, is left out too, because set-up
+#: times still fall over the first few set-ups of a run.
+SETUPS = 11
+SETUP_SKIP = 2
 
 E2E_UNITS = {
     "setup_s": "s", "cold_s": "s", "warm_s": "s", "items_per_s": "1/s",
@@ -131,7 +135,7 @@ def run(args) -> dict:
             failed += sum(not ok for _, ok, _ in checks)
 
             layers, wl_layers = {}, {}
-            if args.trace and len(units) >= 2:
+            if args.trace and len(units) > wl.warm_from:
                 with tracer.span("probes"):
                     wl_layers = wl.trace_layers(spark, tracer, units)
                     path = wl.probe_path(spark)
@@ -165,12 +169,12 @@ def run(args) -> dict:
     host["membw_gbps_after"] = harness.membw_canary()
     host["cpu_canary_s_after"] = harness.cpu_canary()
 
-    if len(units) < 2:
+    if len(units) <= wl.warm_from:
         raise RuntimeError(f"only {len(units)} units of work completed")
-    warm = units[1:]
+    warm = units[wl.warm_from:]
     warm_s = harness.median([u["wall"] for u in warm])
     e2e = {
-        "setup_s": harness.median(setups),
+        "setup_s": harness.median(setups[SETUP_SKIP:]),
         "cold_s": units[0]["wall"],
         "warm_s": warm_s,
         "items_per_s": warm[0]["items"] / warm_s,
@@ -267,9 +271,9 @@ def layer_metrics(tracer, units, e2e, gets, ships, warms, layers) -> dict:
     nu = len(units)
     vals = {
         "session.jvm_start_s": gets[0],
-        "session.get_spark_s": harness.median(gets[1:]),
-        "deploy.ensure_shipped_s": harness.median(ships),
-        "setup.warmup_s": harness.median(warms),
+        "session.get_spark_s": harness.median(gets[SETUP_SKIP:]),
+        "deploy.ensure_shipped_s": harness.median(ships[SETUP_SKIP:]),
+        "setup.warmup_s": harness.median(warms[SETUP_SKIP:]),
         "spark.task_skew": spark_tot.pop("task_skew"),
         "trace.self_s": harvest / nu,
         **{f"spark.{k}": v / nu for k, v in spark_tot.items()},
