@@ -14,8 +14,8 @@ Sections:
    (default /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]``,
    timed to a noop sink (full plan execution, no driver collect cost).
 
-2. **Extraction throughput** — the flagship conversation-extraction
-   job (groupBy conv_id -> Arrow-batched kernel mapInPandas) over a
+2. **Extraction throughput** — the flagship extraction job (per-turn:
+   native classify -> one Arrow-batched pandas-UDF stage) over a
    deterministic synthetic transcript table (ocr_spark.synth, skewed
    turn counts), reported as turns/sec.  This is the BASELINE.md
    north-star metric.
@@ -103,8 +103,6 @@ def run_throughput(cpus: int, data_dir: str) -> dict:
 
     membw_before = membw_canary()
 
-    # 8x cores shuffle partitions: measured 1.5x faster than 4x on the
-    # extraction shuffle (smaller sorter runs, better reduce packing).
     spark = get_spark(
         app_name=f"ocr_bench_tp_{cpus}",
         master=f"local[{cpus}]",

@@ -161,8 +161,8 @@ class CheckpointedExtraction:
     def _commit_bucket(self, b: int) -> BucketStats:
         t0 = time.time()
         part = self.spark.read.parquet(os.path.join(self.staged_dir, f"bucket={b}"))
-        guard_stats: dict = {}
-        out = extract_conversations(part, stats_out=guard_stats).persist()
+        skew_stats: dict = {}
+        out = extract_conversations(part, stats_out=skew_stats).persist()
         self.writer.write_bucket_data(out, b)
         agg = out.agg(
             F.countDistinct("conv_id").alias("n_convs"),
@@ -171,11 +171,11 @@ class CheckpointedExtraction:
             F.sum((F.col("status") == "fallback").cast("long")).alias("n_fallback"),
         ).collect()[0]
         out.unpersist()
-        # skew-guard lineage: how many conversations in this bucket were
-        # rerouted off the collect_list render path — taken from the
-        # guard's own pre-pass (recomputing it here doubled the bucket's
-        # pre-pass scan for a number the guard already had)
-        n_rerouted = guard_stats.get("n_rerouted", 0)
+        # skew counter: how many conversations in this bucket are over
+        # MAX_RENDER_TURNS (the column keeps its historical name so
+        # lineage files keep their width; nothing is rerouted — the
+        # per-turn job treats giant conversations like any other)
+        n_rerouted = skew_stats["n_rerouted"]
         wall = time.time() - t0
         st = BucketStats(
             bucket=b,

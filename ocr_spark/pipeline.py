@@ -1,45 +1,39 @@
 """End-to-end transcript extraction pipeline (SURVEY.md §3, north_rule).
 
-Two execution paths over the canonical transcript table
-``(conv_id, turn_idx, role, text, tool, ts)``:
+One per-turn job over the canonical transcript table
+``(conv_id, turn_idx, role, text, tool, ts)``: :func:`extract_turns`
+(which :func:`extract_conversations`, the flagship entry point, calls)
+scans the turns, runs the native :func:`classify_turns` column
+expressions — block classification (train_cities.py:69-95) and answer
+extraction (utils.py:131-147), whole-stage codegen, no Python — and
+then a single Arrow-batched ``ArrowEvalPython`` stage holding both
+vectorized pandas UDFs: :func:`span_udf` (char-span location,
+utils.py:160-196) and :func:`token_count_udf`.  One row out per input
+turn, with a per-turn status (ok / fallback) for lineage counters.
+No shuffle, no join, no union.
 
-1. :func:`extract_conversations` — the conversation-render path.
-   One shuffle (``groupBy(conv_id)`` with a JVM-side
-   ``sort_array(collect_list(struct(...)))`` so turn order is stable
-   regardless of input partitioning), then a single Arrow-batched
-   ``mapInPandas`` that runs the pure kernels: merge system turn
-   (utils.py:72-74) → gemma render (train_cities.py:44-48) → marker
-   split (train_cities.py:51-57) → block classification
-   (train_cities.py:69-95) → answer extraction (utils.py:131-147) →
-   char-span location (utils.py:160-196).  Emits one row per input
-   turn plus per-turn status (ok / fallback) for lineage counters.
+Why no conversation assembly is needed.  The reference renders a whole
+conversation (merge system turn, utils.py:72-74 → gemma render,
+train_cities.py:44-48) and splits it at the first model marker
+(train_cities.py:51-57) before classifying the completion.  The split
+succeeds whenever the conversation has an assistant turn, and only
+assistant rows are ever classified — an assistant row implies its
+conversation has one — so every output column is a function of the
+turn alone.  tests/test_pipeline.py pins the output row for row
+against the render → split → classify kernels, adversarial edges
+included.
 
-2. :func:`classify_turns` — the per-turn scale path: pure native
-   column expressions (contains / endswith / regexp_extract), no
-   Python at all, zero shuffles.  This is what survives 10^12 turns:
-   per-turn semantics never require conversation assembly.
-
-Skew: :func:`salted_repartition` spreads giant conversations across
-``salt_mod`` sub-partitions while ``sortWithinPartitions`` keeps turn
-order stable within each salted group (north_rule "salted keys for
-skewed long conversations").  Per-turn extraction is salting-safe.
-The render path is guarded against the one skew shape AQE cannot
-split — a single conversation whose ``collect_list`` row would be
-enormous: :func:`extract_conversations` first finds oversized
-conv_ids with a conv_id-only count pre-pass (columnar scan of one
-dictionary-encoded column; map-side partial counts, tiny shuffle)
-and routes them to :func:`extract_turns`, the zero-shuffle per-turn
-mirror whose output is row-identical (an assistant row implies its
-conversation has an assistant turn, so the render path's
-``comp_exists`` predicate is always true exactly where it matters —
-proven by test_giant_conversation_reroute's equality check).  The
-kernel additionally hard-fails if an over-cap conversation ever
-reaches assembly (defense in depth for plan regressions).
+Skew.  Without grouping there is no per-conversation row that can grow
+without bound: a giant conversation is just more scan splits.
+:func:`oversized_conv_ids` still counts the conversations over
+:data:`MAX_RENDER_TURNS`, a skew counter lineage records per bucket.
+:func:`conversations`, the ordered per-conversation assembly, is not on
+the extraction path; the traced ``perfbench/`` probe still times it.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -52,11 +46,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ocr_spark.kernels import (
-    DeterministicTokenizer,
-    find_spans,
-    get_fn_names,
-)
+from ocr_spark.kernels import find_spans
 from ocr_spark.synth import CITY_IDS, FN_NAMES
 
 #: Default vocabulary for span marking: the 5 city codenames
@@ -89,7 +79,7 @@ EXTRACT_SCHEMA = StructType(
 
 
 # ---------------------------------------------------------------------------
-# conversation assembly (the one shuffle)
+# conversation assembly and the skew counter
 # ---------------------------------------------------------------------------
 
 def conversations(df: DataFrame) -> DataFrame:
@@ -116,280 +106,50 @@ def conversations(df: DataFrame) -> DataFrame:
     )
 
 
-def salted_repartition(
-    df: DataFrame, num_partitions: int, key: str = "conv_id", salt_mod: int = 16
-) -> DataFrame:
-    """Repartition by (key, salt) to spread skewed keys (north_rule).
-
-    The salt is key-derived (``xxhash64(turn_idx)``), never random, so
-    placement is deterministic under retries.  ``sortWithinPartitions``
-    restores stable (conv_id, turn_idx) order within each partition.
-    """
-    salt = F.pmod(F.xxhash64(F.col("turn_idx")), F.lit(salt_mod))
-    return (
-        df.repartition(num_partitions, F.col(key), salt)
-        .sortWithinPartitions(key, "turn_idx")
-    )
-
-
-# ---------------------------------------------------------------------------
-# path 1: conversation render path (mapInPandas over assembled convs)
-# ---------------------------------------------------------------------------
-
-#: Vectorized forms of the kernel predicates.  These are the SAME
-#: semantics as classify_completion / extract_answer / count_tokens —
-#: pinned against the pure kernels by tests/test_pipeline.py's golden
-#: oracle — expressed as regexes so the batch runs through pandas'
-#: C string engine instead of a per-turn Python loop:
-#: - classify_completion(text + "<end_of_turn>\n") strips the marker it
-#:   was handed, so has_direction/has_distance test the bare turn text;
-#: - extract_answer("<start_of_turn>model\n" + text) always finds the
-#:   tag at offset 0, so it reduces to "first A-E character of text".
-_DIR_RE = " North| South| East| West"
-#: \Z, not $: Python-re $ also matches just before a trailing newline,
-#: which would diverge from the kernel's endswith() on "500 km\n"
-#: (classify_completion -> ('other', fallback); $ would say 'distance').
-_DIST_RE = r"(?:km|ilometers|mi|iles)\Z"
-_ANSWER_RE = r"([A-E])"
-_MODEL_MARKER = "<start_of_turn>model\n"
-
-
-#: Render-path skew guard default: conversations above this many turns
-#: bypass ``collect_list`` assembly and run the per-turn mirror instead
-#: (north_rule "salted keys for skewed long conversations", completed).
-#: 2^16 turns x ~100 B/turn keeps the assembled row well under 10 MB.
+#: Skew threshold: conversations above this many turns count towards
+#: ``n_rerouted`` (:func:`extract_conversations`).  2^16 turns x ~100
+#: B/turn is where an assembled conversation row passes ~10 MB.
 MAX_RENDER_TURNS = 65536
 
 
-def oversized_conv_ids(
-    df: DataFrame, max_turns: int | None = MAX_RENDER_TURNS,
-    max_bytes: int | None = None,
-) -> DataFrame:
-    """conv_ids whose conversations exceed the render-assembly caps.
+def oversized_conv_ids(df: DataFrame) -> DataFrame:
+    """conv_ids of the conversations with more than MAX_RENDER_TURNS turns.
 
-    The turn-count pre-pass projects ONLY conv_id (columnar scan of a
-    dictionary-encoded column; partial counts map-side).  ``max_bytes``
-    additionally bounds total text bytes per conversation — off by
-    default because it forces the pre-pass to read the text column.
+    Projects ONLY conv_id (columnar scan of a dictionary-encoded
+    column; partial counts map-side).
     """
-    aggs = [F.count("*").alias("n_turns")]
-    if max_bytes is not None:
-        aggs.append(F.sum(F.length("text")).alias("n_bytes"))
-        counts = df.select("conv_id", "text").groupBy("conv_id").agg(*aggs)
-    else:
-        counts = df.select("conv_id").groupBy("conv_id").agg(*aggs)
-    cond = F.lit(False)
-    if max_turns is not None:
-        cond = cond | (F.col("n_turns") > max_turns)
-    if max_bytes is not None:
-        cond = cond | (F.col("n_bytes") > max_bytes)
-    return counts.filter(cond).select("conv_id")
-
-
-def _extract_batches(
-    batches: Iterator[pd.DataFrame], vocab: Sequence[str],
-    max_turns: int | None = None,
-) -> Iterator[pd.DataFrame]:
-    """Kernel driver for one Arrow batch stream (one task).
-
-    Fully vectorized: the batch's conversations are flattened to one
-    turn-level frame and every predicate runs as a pandas str op; the
-    only remaining per-row Python is span materialization, and only on
-    the rows a vectorized contains() pre-filter selects.
-    """
-    import re as _re
-
-    import numpy as np
-
-    from ocr_spark.kernels.tokenizer import count_pieces_batch
-
-    vocab = list(vocab)
-    vocab_re = _re.compile("|".join(_re.escape(k) for k in vocab))
-
-    for pdf in batches:
-        lens = np.fromiter((len(x) for x in pdf["turn_idxs"]), dtype=np.int64,
-                           count=len(pdf))
-        if max_turns is not None and len(lens) and int(lens.max()) > max_turns:
-            raise RuntimeError(
-                f"oversized conversation ({int(lens.max())} turns > cap "
-                f"{max_turns}) reached the render path — the reroute "
-                "pre-pass was bypassed or its plan regressed"
-            )
-        n = int(lens.sum())
-        if n == 0:
-            yield pd.DataFrame({f.name: [] for f in EXTRACT_SCHEMA.fields})
-            continue
-
-        conv_rep = np.repeat(pdf["conv_id"].to_numpy(), lens)
-        tidx = np.concatenate([np.asarray(a, dtype=np.int64) for a in pdf["turn_idxs"]])
-        # Arrow hands list columns over as object arrays of ndarrays —
-        # one np.concatenate is pointer copies in C, vs a Python-level
-        # loop touching every turn
-        roles = pd.Series(np.concatenate(pdf["roles"].to_numpy()), dtype=object)
-        texts = pd.Series(np.concatenate(pdf["texts"].to_numpy()), dtype=object)
-        tex_np = texts.to_numpy()
-        is_assistant = roles.eq("assistant").to_numpy()
-
-        # X3/X4 equivalence without materializing the render: the gemma
-        # render contains the model marker iff the conversation has an
-        # assistant turn or a payload itself contains the marker, so
-        # split_completion succeeds exactly when this predicate holds
-        # (the render/split kernels stay byte-pinned by their own
-        # golden tests and the x3/x4 catalog queries).  Per-conv any()
-        # via reduceat over the flat arrays; the payload-marker scan
-        # runs only on conversations with no assistant turn at all.
-        if (lens > 0).all():
-            begins = np.empty(len(lens), dtype=np.int64)
-            begins[0] = 0
-            np.cumsum(lens[:-1], out=begins[1:])
-            conv_has = np.bitwise_or.reduceat(is_assistant, begins)
-        else:  # zero-turn groups would corrupt reduceat segment bounds
-            conv_has = np.zeros(len(lens), dtype=bool)
-            pos = 0
-            for ci, ln in enumerate(lens):
-                if ln:
-                    conv_has[ci] = bool(is_assistant[pos:pos + ln].any())
-                pos += ln
-        for ci in np.nonzero(~conv_has)[0]:
-            conv_has[ci] = any(_MODEL_MARKER in t for t in pdf["texts"].iat[ci])
-        comp_exists = np.repeat(conv_has, lens)
-
-        active = is_assistant & comp_exists
-        # classification/extraction regexes run on the assistant subset
-        # only (they are masked to it anyway); scatter results back
-        asst_idx = np.nonzero(is_assistant)[0]
-        at = texts.iloc[asst_idx]
-        has_dir = np.zeros(n, dtype=bool)
-        has_dir[asst_idx] = at.str.contains(_DIR_RE, regex=True).to_numpy()
-        has_dist = np.zeros(n, dtype=bool)
-        has_dist[asst_idx] = at.str.contains(_DIST_RE, regex=True).to_numpy()
-        xor = has_dir ^ has_dist
-
-        block_class = np.where(
-            active & xor & has_dir, "direction",
-            np.where(active & xor & has_dist, "distance", "other"),
-        )
-        ans = at.str.extract(_ANSWER_RE, expand=False)
-        answer = np.full(n, None, dtype=object)
-        answer[asst_idx] = ans.astype(object).where(ans.notna(), None).to_numpy()
-        no_answer = np.full(n, True, dtype=bool)
-        no_answer[asst_idx] = ans.isna().to_numpy()
-        answer = np.where(active, answer, None)
-        no_answer |= ~active
-        status = np.where(
-            is_assistant & (~comp_exists | (~xor & no_answer)), "fallback", "ok"
-        )
-        n_tokens = np.asarray(count_pieces_batch(tex_np)).astype("int32")
-
-        # spans: vocab-order-then-occurrence-order per turn.  ONE
-        # combined-alternation scan pre-filters the rows (instead of
-        # one pass per vocab key); only hit rows pay the per-key
-        # find_spans Python.
-        spans: list = [[] for _ in range(n)]
-        hit = texts.str.contains(vocab_re).to_numpy()
-        for i in np.nonzero(hit)[0]:
-            t = tex_np[i]
-            for k in vocab:
-                if k in t:
-                    spans[i].extend(
-                        {"key": k, "start": s, "end": e}
-                        for (s, e) in find_spans(t, k)
-                    )
-
-        yield pd.DataFrame(
-            {
-                "conv_id": conv_rep,
-                "turn_idx": tidx.astype("int32"),
-                "role": roles,
-                "clean_text": texts,
-                "char_spans": spans,
-                "block_class": block_class,
-                "answer": answer,
-                "status": status,
-                "n_tokens": n_tokens,
-            }
-        )
-
-
-def _render_extract(
-    base: DataFrame, vocab: list, num_partitions: int | None,
-    max_turns: int | None,
-) -> DataFrame:
-    convs = conversations(base)
-    if num_partitions:
-        convs = convs.repartition(num_partitions, "conv_id")
-    return convs.mapInPandas(
-        lambda it: _extract_batches(it, vocab, max_turns), schema=EXTRACT_SCHEMA
+    return (
+        df.select("conv_id").groupBy("conv_id").count()
+        .filter(F.col("count") > MAX_RENDER_TURNS).select("conv_id")
     )
 
+
+# ---------------------------------------------------------------------------
+# the extraction job
+# ---------------------------------------------------------------------------
 
 def extract_conversations(
     df: DataFrame, vocab: Sequence[str] | None = None,
-    num_partitions: int | None = None,
-    max_turns: int | None = MAX_RENDER_TURNS,
-    max_bytes: int | None = None,
-    routed_isin_cap: int = 1024,
     stats_out: dict | None = None,
 ) -> DataFrame:
-    """The flagship extraction job (render path).  See module docstring.
+    """The flagship extraction job: :func:`extract_turns` over ``df``.
 
-    Conversations above ``max_turns`` turns (or ``max_bytes`` total
-    text bytes, if set) are routed to the per-turn mirror
-    :func:`extract_turns` instead of ``collect_list`` assembly; output
-    rows are identical either way (module docstring, skew paragraph).
-    ``max_turns=None`` with ``max_bytes=None`` disables routing.
-
-    The oversized set is resolved with a BOUNDED driver collect
-    (``limit(routed_isin_cap + 1)`` — never corpus-sized) so the
-    common cases stay cheap: NO oversized conversations -> the plain
-    single-shuffle render plan, zero join overhead (the kernel's
-    hard-fail stays as defense in depth); <= ``routed_isin_cap``
-    oversized -> two scan-level ``isin`` filters, which reach the
-    parquet reader as pushed predicates; only an adversarial corpus
-    with MORE than the cap falls back to the broadcast anti/semi join
-    pair.  The full join path previously ran unconditionally and cost
-    ~18% of the flagship job wall time at bench scale (measured r4) —
-    all of it AQE replan barriers and empty-broadcast probes for a
-    skew case that almost never fires.
-
-    ``stats_out``: pass a dict to receive ``n_rerouted`` (the oversized
-    conversation count the pre-pass already resolved) — lineage wants
-    the number and recomputing the pre-pass would double its scan.
+    ``stats_out``: pass a dict to receive ``n_rerouted``, the number of
+    conversations over :data:`MAX_RENDER_TURNS` — a skew counter that
+    lineage records per bucket.  It costs one conv_id-only count job,
+    run eagerly and only when a dict is passed; the extraction itself
+    treats those conversations like any other.
     """
-    vocab = list(vocab or DEFAULT_VOCAB)
-    base = df.select("conv_id", "turn_idx", "role", "text")
     if stats_out is not None:
-        stats_out["n_rerouted"] = 0
-    if max_turns is None and max_bytes is None:
-        return _render_extract(base, vocab, num_partitions, None)
-    big = oversized_conv_ids(base, max_turns, max_bytes)
-    big_ids = [r["conv_id"] for r in big.limit(routed_isin_cap + 1).collect()]
-    if not big_ids:
-        return _render_extract(base, vocab, num_partitions, max_turns)
-    if len(big_ids) <= routed_isin_cap:
-        if stats_out is not None:
-            stats_out["n_rerouted"] = len(big_ids)
-        regular = base.filter(~F.col("conv_id").isin(big_ids))
-        routed = base.filter(F.col("conv_id").isin(big_ids))
-    else:
-        if stats_out is not None:
-            # adversarial case only: the bounded collect saw > cap ids,
-            # so one count job resolves the exact number
-            stats_out["n_rerouted"] = big.count()
-        regular = base.join(F.broadcast(big), "conv_id", "left_anti")
-        routed = base.join(F.broadcast(big), "conv_id", "left_semi")
-    return _render_extract(regular, vocab, num_partitions, max_turns).unionByName(
-        extract_turns(routed, vocab)
-    )
+        stats_out["n_rerouted"] = oversized_conv_ids(df).count()
+    return extract_turns(df, vocab)
 
 
 def extract_turns(df: DataFrame, vocab: Sequence[str] | None = None) -> DataFrame:
-    """Per-turn mirror of the render path's output (EXTRACT_SCHEMA).
+    """Per-turn extraction (EXTRACT_SCHEMA); see the module docstring.
 
-    Native classify (X8/X2, zero shuffle) + the vectorized span and
-    token-count pandas UDFs.  Row-identical to the render path for any
-    input (see module docstring): this is both the 10^12-turn scale
-    path and the reroute target for oversized conversations.
+    Native classify (X8/X2) then one ``ArrowEvalPython`` carrying the
+    span and token-count pandas UDFs; zero shuffle.
     """
     vocab = list(vocab or DEFAULT_VOCAB)
     c = classify_turns(df.select("conv_id", "turn_idx", "role", "text"))
@@ -407,7 +167,7 @@ def extract_turns(df: DataFrame, vocab: Sequence[str] | None = None) -> DataFram
 
 
 # ---------------------------------------------------------------------------
-# path 2: per-turn native scale path (no Python, no shuffle)
+# native per-turn classification (no Python, no shuffle)
 # ---------------------------------------------------------------------------
 
 DIRECTION_WORDS = [" North", " South", " East", " West"]
@@ -462,10 +222,11 @@ def classify_turns(df: DataFrame) -> DataFrame:
 def span_udf(vocab: Sequence[str]):
     """Vectorized pandas UDF: all vocab-key char spans per text (X6).
 
-    Same shape as the render path's span stage (_extract_batches): a
-    vectorized ``str.contains`` pre-filter per vocab key selects the
-    rows, and Python span materialization runs only on the hits —
-    vocab keys are rare, so the hot loop stays in pandas' C engine.
+    ONE combined-alternation ``str.contains`` scan pre-filters the rows
+    (instead of one pass per vocab key), and Python span
+    materialization runs only on the hits, in vocab-order-then-
+    occurrence-order per turn — vocab keys are rare, so the hot loop
+    stays in pandas' C engine.
     """
     import re as _re
 
@@ -494,16 +255,6 @@ def span_udf(vocab: Sequence[str]):
     return _spans
 
 
-def fn_names_udf():
-    """Vectorized pandas UDF for the import parser (X1, utils.py:53-61)."""
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def _fns(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: get_fn_names(t) if t is not None else [])
-
-    return _fns
-
-
 def token_count_udf():
     """Vectorized pandas UDF: deterministic token count per text (X13).
 
@@ -511,8 +262,7 @@ def token_count_udf():
     by construction (tokenizer.py count_tokens), and
     ``count_pieces_batch`` computes the same count with a vectorized
     numpy char-class pass (~3x the regex; equivalence fuzz-pinned) —
-    no per-row encode, no id hashing — matching the render path's
-    n_tokens stage (_extract_batches).  Keep
+    no per-row encode, no id hashing.  Keep
     ``DeterministicTokenizer.encode`` for paths that need actual ids.
     """
     from ocr_spark.kernels.tokenizer import count_pieces_batch

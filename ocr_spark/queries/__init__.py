@@ -63,7 +63,7 @@ _DRIVER_PRIORITY = [
     # -- 2: latest driver evidence is r1/r2 -------------------------------
     "a10_kl_divergence", "a5_topk_per_group", "a8_cumlogsum",
     "a9_vector_mean",
-    # (nineteen trivial r2-greens rotated back out to make room for the
+    # (twenty-one trivial r2-greens rotated back out to make room for the
     #  corpus_ops entries and the 1b plan-changed set — j5_union,
     #  j7_dedup, p10_sanitize, w4_stride_sample, x6_span_count, a5_topk,
     #  a14_shift_compare, a1_grouped_accuracy, a2_rollup,

@@ -257,16 +257,19 @@ def derived_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     conv_id = F.concat(F.lit("conv"), F.lpad(F.col("doc_id").cast("string"), 8, "0"))
 
     did = F.col("doc_id")
-    user_text = spark_user_text(did)
-    assistant_text = spark_assistant_text(did)
 
-    sys_rows = docs.select(
-        conv_id.alias("conv_id"), F.lit(0).alias("turn_idx"),
-        F.lit("system").alias("role"), F.lit(SYSTEM_PREAMBLE).alias("text"))
-    usr_rows = docs.select(
-        conv_id.alias("conv_id"), F.lit(1).alias("turn_idx"),
-        F.lit("user").alias("role"), user_text.alias("text"))
-    ast_rows = docs.select(
-        conv_id.alias("conv_id"), F.lit(2).alias("turn_idx"),
-        F.lit("assistant").alias("role"), assistant_text.alias("text"))
-    return sys_rows.unionByName(usr_rows).unionByName(ast_rows)
+    def turn(idx, role, text):
+        return F.struct(F.lit(idx).alias("turn_idx"), F.lit(role).alias("role"),
+                        text.alias("text"))
+
+    # ONE scan of documents, three turns per row: a union of three
+    # scans would run three tasks (and start three Python workers
+    # under a shuffle-free consumer) for a one-file table
+    return docs.select(
+        conv_id.alias("conv_id"),
+        F.inline(F.array(
+            turn(0, "system", F.lit(SYSTEM_PREAMBLE)),
+            turn(1, "user", spark_user_text(did)),
+            turn(2, "assistant", spark_assistant_text(did)),
+        )),
+    )

@@ -91,8 +91,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str):
-    """Read one driver-provided parquet table (TESTDATA.md)."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))

@@ -17,12 +17,12 @@ is the engine's stream-ingest path for the same per-turn semantics:
   write and the checkpoint commit replays the batch into the same
   ``batch_id=<id>`` directory, and the end-to-end result stays
   exactly-once (file-source offsets are tracked in the checkpoint WAL).
-
-Conversation-level extraction (the render path) needs all turns of a
-conversation and is therefore a batch concern; streaming emits per-turn
-rows immediately and conversations are assembled downstream once their
-turn set is complete (the reference never renders a partial
-conversation either).
+- :func:`stream_assemble_extract` buffers turns in the state store
+  until a conversation is complete (the reference never renders a
+  partial conversation), then runs the batch job's extraction,
+  :func:`ocr_spark.pipeline.extract_turns`, on the completed
+  conversation's turns.  The stateful operator decides only *when* a
+  conversation is emitted; extraction lives in one place.
 """
 
 from __future__ import annotations
@@ -153,7 +153,7 @@ _ASSEMBLE_STATE_SCHEMA = (
 
 #: Output of the stateful assembly stage: one row per COMPLETED
 #: conversation, same parallel-array layout as pipeline.conversations,
-#: consumed by the stateless extraction mapInPandas that follows it.
+#: flattened back to turns for the per-turn extraction that follows it.
 _ASSEMBLED_CONV_SCHEMA = (
     "conv_id string, turn_idxs array<int>, roles array<string>, "
     "texts array<string>"
@@ -189,16 +189,17 @@ def stream_assemble_extract(
     stream: DataFrame, vocab=None, idle_timeout_ms: int | None = None
 ) -> DataFrame:
     """Custom stateful operator: assemble conversations ACROSS
-    micro-batches, then run the full render-path extraction per
-    completed conversation (``applyInPandasWithState``).
+    micro-batches (``applyInPandasWithState``), then run the batch
+    job's per-turn extraction on each completed conversation.
 
     The stateless streaming path (stream_classify) emits per-turn rows
-    immediately; this operator provides the conversation-level
-    semantics on a stream: turns buffer in the state store keyed by
-    conv_id until the conversation COMPLETES, then the buffered turns
-    run through the same Arrow kernel driver as the batch pipeline
-    (pipeline._extract_batches) and the state is dropped, so state
-    size is bounded by in-flight (incomplete) conversations only.
+    immediately; this operator emits a conversation's rows only once
+    the conversation is complete: turns buffer in the state store keyed
+    by conv_id until the conversation COMPLETES, then the buffered
+    turns are flattened (``inline(arrays_zip(...))``) and run through
+    :func:`ocr_spark.pipeline.extract_turns` — the same extraction as
+    the batch pipeline — and the state is dropped, so state size is
+    bounded by in-flight (incomplete) conversations only.
 
     Completion is gated on an EXPLICIT terminal signal: the
     :data:`EOC_ROLE` marker row carrying the expected turn count
@@ -214,9 +215,8 @@ def stream_assemble_extract(
     ``idle_timeout_ms`` (optional) arms a processing-time timeout per
     conversation: a conversation that receives no new turns for that
     long — a producer crashed before emitting its marker — is flushed
-    through the same kernel path (its rows carry the kernel's normal
-    per-turn semantics: a flush with no assistant turn classifies as
-    ``fallback``) instead of pinning the state store forever.
+    through the same extraction (its rows carry the normal per-turn
+    semantics) instead of pinning the state store forever.
     CAVEAT: use it with a continuous micro-batch trigger
     (``processingTime``) — timeouts are evaluated per micro-batch, and
     a ``Trigger.AvailableNow`` drain combined with pending
@@ -228,31 +228,27 @@ def stream_assemble_extract(
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ocr_spark.pipeline import DEFAULT_VOCAB, EXTRACT_SCHEMA, _extract_batches
-
-    vocab = list(vocab or DEFAULT_VOCAB)
+    from ocr_spark.pipeline import extract_turns
 
     # The stateful operator ONLY assembles: it emits one row of
     # parallel turn arrays per completed conversation.  Extraction runs
-    # downstream in a stateless mapInPandas, where Arrow re-batches
-    # many conversations per kernel call — applyInPandasWithState
-    # invokes its function once per GROUP, so running the kernel inside
-    # it would pay per-conversation kernel setup (measured ~10x slower
-    # at bench scale, round 4); this split restores the batch
-    # pipeline's kernel batching bit-identically.
+    # downstream, statelessly, where Arrow re-batches many
+    # conversations' turns per UDF call — applyInPandasWithState
+    # invokes its function once per GROUP, so running the kernels
+    # inside it would pay per-conversation setup (measured ~10x slower
+    # at bench scale, round 4).
     def assemble(key, pdfs, state: "GroupState"):
         import pandas as pd
 
         (conv_id,) = key
 
         def conv_row(turn_idxs, roles, texts):
-            order = sorted(range(len(turn_idxs)), key=lambda i: turn_idxs[i])
             return iter([pd.DataFrame(
                 {
                     "conv_id": [conv_id],
-                    "turn_idxs": [[turn_idxs[i] for i in order]],
-                    "roles": [[roles[i] for i in order]],
-                    "texts": [[texts[i] for i in order]],
+                    "turn_idxs": [turn_idxs],
+                    "roles": [roles],
+                    "texts": [texts],
                 }
             )])
 
@@ -297,9 +293,10 @@ def stream_assemble_extract(
             ),
         )
     )
-    return assembled.mapInPandas(
-        lambda it: _extract_batches(it, vocab), schema=EXTRACT_SCHEMA
-    )
+    turns = assembled.select(
+        "conv_id", F.inline(F.arrays_zip("turn_idxs", "roles", "texts"))
+    ).toDF("conv_id", "turn_idx", "role", "text")
+    return extract_turns(turns, vocab)
 
 
 #: Spark's on-heap default state store.  At 10^12-turn scale the

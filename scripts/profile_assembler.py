@@ -1,19 +1,22 @@
 """Phase breakdown of the stateful stream assembler (VERDICT r4 #3).
 
-bench_stream_assemble reads 13.7-18k turns/s — ~100x below the batch
-render path.  This script decomposes WHERE the time goes by running
+bench_stream_assemble read 13.7-18k turns/s — ~100x below the batch
+extraction job.  This script decomposes WHERE the time goes by running
 the same drain with pieces removed, on the same /dev/shm parquet drop
 files and the same session:
 
-  A. full pipeline       — assembler (applyInPandasWithState) + kernel
-                           extraction (mapInPandas) + parquet sink
+  A. full pipeline       — assembler (applyInPandasWithState), turns
+                           flattened back out (inline), the batch job's
+                           per-turn extraction (one ArrowEvalPython
+                           stage), parquet sink
   B. assembler only      — same stateful op, kernel stage removed
                            (assembled conv rows straight to the sink)
   C. stateless passthrough — readStream -> parquet sink, no stateful
                            op at all: micro-batch planning + source +
                            sink floor
   D. batch reference     — the same rows through the batch
-                           extract_conversations (the 100x comparator)
+                           extract_conversations, the per-turn job
+                           (the 100x comparator)
 
 plus knob sweeps on the full pipeline: micro-batch count
 (files_per_batch), Arrow maxRecordsPerBatch, RocksDB vs on-heap state
@@ -60,7 +63,7 @@ def main() -> int:
     )
     from ocr_spark.synth import transcripts
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     spark = get_spark(app_name="assembler_profile", master=f"local[{cpus}]",
                       shuffle_partitions=cpus)
     tmp = tempfile.mkdtemp(
@@ -94,7 +97,7 @@ def main() -> int:
             spark, inp, fresh_out(), max_files=4, fmt="parquet"))
 
         # B. assembler only (stateful op, kernel removed): reuse the
-        # library operator but drop its downstream mapInPandas by
+        # library operator but drop its downstream extraction by
         # draining the ASSEMBLED stream before extraction.  The
         # operator's assembled schema is internal, so rebuild the same
         # applyInPandasWithState here via the public fn with a noop

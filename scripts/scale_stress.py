@@ -1,17 +1,14 @@
-"""10x flagship scale-stress with the reroute guard LIVE (VERDICT r4 #4).
+"""10x flagship scale-stress for the per-turn extraction job.
 
 Builds the bench corpus at 10x (default 10M conversations -> ~165M
-turns), plants one 10^5-turn conversation plus three conversations over
-``max_bytes``, runs `extract_conversations` end-to-end with the
-oversized-conversation reroute guard active, and checks at THAT scale:
+turns) plus one 10^5-turn conversation (over ``MAX_RENDER_TURNS``),
+runs `extract_conversations` end-to-end, and checks at THAT scale:
 
-  - the guard resolves exactly the planted conversations
-    (``stats_out["n_rerouted"] == 4``; same counter lineage records),
-  - the rerouted conversations' output rows are identical to the
-    per-turn mirror (`extract_turns`) — the row-identity contract the
-    reduced-size pytest (tests/test_pipeline.py
-    test_giant_conversation_reroute) pins every run,
-  - sustained turns/s for the guarded end-to-end job.
+  - one output row per input turn,
+  - a sample of conversations, the giant included, byte-equal to the
+    pure-kernel golden (the same render -> split -> classify oracle
+    tests/test_pipeline.py pins every run),
+  - sustained turns/s.
 
 This is the north_rule's 10^12-turn story scaled as far as one box
 allows; results go to BENCH.md §1d.  Prints one JSON line.
@@ -29,17 +26,19 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_CONVS = int(os.environ.get("OCR_STRESS_CONVS", 10_000_000))
-MAX_BYTES = 2_000_000  # reroute threshold for the fat-conversation axis
+#: conversations compared with the pure-kernel golden
+SAMPLE_IDS = ["convgiant0"] + [f"conv{i:08d}" for i in range(0, 10 * 997, 997)]
 
 
 def main() -> int:
     from pyspark.sql import functions as F
 
-    from ocr_spark.pipeline import extract_conversations, extract_turns
+    from ocr_spark.pipeline import extract_conversations
     from ocr_spark.session import get_spark
     from ocr_spark.synth import transcripts
+    from tests.test_pipeline import _golden_rows, _spark_rows
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     base_dir = os.environ.get(
         "OCR_STRESS_DIR",
         "/dev/shm/ocr_stress" if os.path.isdir("/dev/shm") else "/tmp/ocr_stress",
@@ -50,7 +49,7 @@ def main() -> int:
     spark = get_spark(app_name="ocr_scale_stress", master=f"local[{cpus}]",
                       shuffle_partitions=8 * cpus)
 
-    # ---- corpus: 10x synth + 1 giant (10^5 turns) + 3 fat (>max_bytes)
+    # ---- corpus: 10x synth + 1 giant (10^5 turns) -------------------
     t0 = time.time()
     t = transcripts(spark, N_CONVS).select("conv_id", "turn_idx", "role", "text")
     i = F.col("id")
@@ -68,49 +67,33 @@ def main() -> int:
         .otherwise(F.lit("assistant")).alias("role"),
         payload.alias("text"),
     )
-    # three conversations under the turn cap but over MAX_BYTES total
-    # text bytes (300 turns x ~10KB = ~3MB each)
-    fat = spark.range(3 * 300).select(
-        F.format_string("convfat%03d", (i / 300).cast("int")).alias("conv_id"),
-        (i % 300).cast("int").alias("turn_idx"),
-        F.when(i % 300 == 0, F.lit("system")).when(i % 2 == 1, F.lit("user"))
-        .otherwise(F.lit("assistant")).alias("role"),
-        F.concat(F.lit("fatpayload "), i.cast("string"), F.lit(" "),
-                 F.repeat(F.lit("x"), 10_000)).alias("text"),
-    )
-    t.unionByName(giant).unionByName(fat).write.mode("overwrite").parquet(data_dir)
+    t.unionByName(giant).write.mode("overwrite").parquet(data_dir)
     gen_sec = time.time() - t0
 
     df = spark.read.parquet(data_dir)
     n_turns = df.count()
 
-    # ---- guarded end-to-end run (warmup + 2 measured passes) ----------
-    def run_pass(stats):
+    # ---- end-to-end run (warmup + 2 measured passes) ------------------
+    def run_pass():
         t0 = time.time()
-        out = extract_conversations(df, max_bytes=MAX_BYTES, stats_out=stats)
-        out.write.format("noop").mode("overwrite").save()
+        extract_conversations(df).write.format("noop").mode("overwrite").save()
         return time.time() - t0
 
-    stats = {}
-    warm = run_pass(stats)
-    passes = [run_pass(stats) for _ in range(2)]
+    warm = run_pass()
+    passes = [run_pass() for _ in range(2)]
     best = min(passes)
 
-    assert stats["n_rerouted"] == 4, f"expected 4 rerouted, got {stats}"
-
-    # ---- row-identity of the REROUTED conversations vs the mirror -----
-    routed_ids = ["convgiant0", "convfat000", "convfat001", "convfat002"]
-    routed_in = df.filter(F.col("conv_id").isin(routed_ids))
-    got = extract_conversations(df, max_bytes=MAX_BYTES).filter(
-        F.col("conv_id").isin(routed_ids))
-    want = extract_turns(routed_in)
-    diff = got.exceptAll(want).count() + want.exceptAll(got).count()
-    n_routed_rows = want.count()
-    assert diff == 0, f"rerouted rows diverge from per-turn mirror: {diff}"
-    assert n_routed_rows == 100_000 + 3 * 300
+    # ---- row count and golden equality ---------------------------------
+    out = extract_conversations(df)
+    n_out = out.count()
+    assert n_out == n_turns, f"{n_out} output rows for {n_turns} input turns"
+    in_sample = F.col("conv_id").isin(SAMPLE_IDS)
+    golden = _golden_rows([r.asDict() for r in df.filter(in_sample).collect()])
+    got = _spark_rows(out.filter(in_sample))
+    assert got == golden, "sampled conversations diverge from the kernel golden"
 
     result = {
-        "metric": "scale_stress_10x_guarded_extraction",
+        "metric": "scale_stress_10x_extraction",
         "n_convs": N_CONVS,
         "n_turns": n_turns,
         "gen_sec": round(gen_sec, 1),
@@ -118,9 +101,7 @@ def main() -> int:
         "pass_secs": [round(p, 1) for p in passes],
         "best_sec": round(best, 1),
         "turns_per_sec": round(n_turns / best, 1),
-        "n_rerouted": stats["n_rerouted"],
-        "rerouted_rows_identical": True,
-        "rerouted_rows": n_routed_rows,
+        "golden_rows_checked": len(golden),
         "cpus": cpus,
     }
     print(json.dumps(result))

@@ -44,51 +44,52 @@ def test_rendered_mt_is_single_shuffle(spark):
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
 
 
-def test_flagship_pipeline_is_single_shuffle(spark):
-    """extract_conversations (reroute guard off): one conv_id shuffle
-    feeding one Arrow mapInPandas — the north_rule hot-loop shape."""
+def _assert_one_arrow_stage(plan: str) -> None:
+    """The per-turn extraction shape: no MapInPandas, and exactly one
+    ArrowEvalPython that carries both the span and the token-count UDF
+    (one Arrow hop per batch, not one per UDF)."""
+    assert "MapInPandas" not in plan
+    arrow = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+    assert len(arrow) == 1, arrow
+    assert "_spans(" in arrow[0] and "_ntok(" in arrow[0], arrow[0]
+
+
+def test_flagship_pipeline_is_one_arrow_stage(spark):
+    """extract_conversations is the per-turn job: scan -> native
+    classify -> one ArrowEvalPython, with no shuffle, no join and no
+    union — the north_rule hot-loop shape."""
     from ocr_spark.pipeline import extract_conversations
     from ocr_spark.synth import transcripts
 
-    plan = _plan(
-        extract_conversations(transcripts(spark, 50, seed=42), max_turns=None)
-    )
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "MapInPandas" in plan
+    plan = _plan(extract_conversations(transcripts(spark, 50, seed=42)))
+    assert "Exchange" not in plan
+    assert "Join" not in plan and "Union" not in plan
+    _assert_one_arrow_stage(plan)
 
 
-def test_flagship_guard_resolves_to_cheapest_plan(spark):
-    """extract_conversations' oversized-conversation guard (round 4)
-    resolves via a bounded driver collect into one of three plans, each
-    pinned here: (a) no oversized conversations -> the plain
-    single-shuffle render plan, zero join/filter overhead; (b) a few ->
-    two scan-level isin filters, still no joins; (c) more than the
-    isin cap -> broadcast anti/semi joins, never a second shuffle of
-    the turn table."""
-    from ocr_spark.pipeline import extract_conversations
-    from ocr_spark.synth import transcripts
+def test_stream_assemble_extract_reuses_per_turn_stage(spark, tmp_path):
+    """The stateful stream assembler's extraction stage is the batch
+    job's: the assembled conversations are flattened back to turns and
+    run through the same single ArrowEvalPython, no MapInPandas."""
+    from ocr_spark.streaming import read_transcript_stream, stream_assemble_extract
 
-    t = transcripts(spark, 50, seed=42)
+    stream = read_transcript_stream(spark, str(tmp_path))
+    plan = _plan(stream_assemble_extract(stream))
+    assert "FlatMapGroupsInPandasWithState" in plan
+    assert "Generate inline" in plan
+    _assert_one_arrow_stage(plan)
 
-    # (a) clean corpus: identical shape to the unguarded plan
-    plan = _plan(extract_conversations(t))
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "Join" not in plan and "MapInPandas" in plan
 
-    # (b) some oversized (cap forced low): isin filters, no joins
-    plan = _plan(extract_conversations(t, max_turns=5))
-    assert "Join" not in plan
-    assert plan.count("MapInPandas") >= 1  # render branch
-    assert "Union" in plan  # + per-turn branch
-    # membership filter on the routed ids (Catalyst rewrites a 1-item
-    # isin to an equality predicate, so accept either spelling)
-    assert "Filter" in plan and "conv00000029" in plan
+def test_derived_transcripts_scans_documents_once(spark):
+    """The 3-turn oracle table reads documents.parquet once and emits
+    the three turns per row with a generator — a union of three scans
+    would run three tasks (three Python workers under a shuffle-free
+    consumer such as pipeline_extract) for a one-file table."""
+    from ocr_spark.queries.derive import derived_transcripts
 
-    # (c) more oversized than the isin cap: broadcast anti/semi joins
-    plan = _plan(extract_conversations(t, max_turns=5, routed_isin_cap=0))
-    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
-    assert "BroadcastHashJoin" in plan
-    assert plan.count("LeftAnti") == 1 and plan.count("LeftSemi") == 1
+    plan = _plan(derived_transcripts(spark, SF_DIR_ORACLE))
+    assert plan.count("FileScan") == 1
+    assert "Union" not in plan
 
 
 def test_batch_packing_prefix_sum_is_bucketed(spark):
